@@ -42,7 +42,8 @@ def lww_dedup(
     """Keep the winning (max-seq) event per key; adds ``__deleted``.
 
     Output has exactly one row per key — the contract
-    :meth:`IceboxTable.merge` requires.
+    :meth:`IceboxTable.merge` requires of a table without ``seq_col``
+    (one with ``seq_col`` resolves several change rows per key itself).
 
     ``num_partitions`` pins the shuffle to an explicit
     ``repartition(n, *key_cols)``; the groupBy/window reuses that

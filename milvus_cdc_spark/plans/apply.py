@@ -1,14 +1,23 @@
 """The replication apply plan — the hot path (SURVEY.md §3.2).
 
-One micro-batch = one Catalyst plan:
+One micro-batch = one Catalyst plan with ONE exchange:
 
     read offset range (pushed-down seq predicate)
       → scope + msg-type filters            (T1, T2)
-      → salted repartition of hot repos     (skew rule)
-      → LWW dedup window per (repo, path)   (O1/O2/K4 collapsed)
-      → sha256 / normalize pandas UDFs      (vectorized row transforms)
+      → salted repartition of hot repos     (skew rule, off by default)
+      → sha256 / normalize                  (row transforms)
       → icebox MERGE INTO                   (K1: atomic snapshot commit)
+          mor: repartition(num_buckets, repo, path) → per-bucket delta
+               files; reads and minor compaction keep the max-seq row
+          cow: ∪ old rows of the touched buckets → repartition(
+               num_buckets, repo, path) → max_by(row, (seq, side))
+               → one rewritten file per bucket
       → lineage + metrics + checkpoint      (K5, M1, M2)
+
+Last-writer-wins per key (O1/O2/K4) is the sink's seq ordering on both
+paths, so no pre-merge dedup runs (``ReplicateJob.dedup``). A CoW batch
+first finds its touched buckets with a key-only pass over the same range
+and hands them to the merge, which then stages nothing.
 
 DDL events are applied transactionally BEFORE the data that needs them:
 each micro-batch is capped at the first schema event in its range, the
@@ -21,7 +30,7 @@ Exactly-once: the icebox snapshot carries ``(task_id, batch_id,
 offset_end)`` properties; on resume, a data commit newer than the
 checkpoint is detected and the checkpoint is fast-forwarded instead of
 re-applied (batch-id fencing). Even without the fence, replaying a range
-through deterministic dedup + MERGE is idempotent — both layers are
+through the seq-resolved MERGE is idempotent — both layers are
 tested (tests/test_resume.py).
 """
 
@@ -87,22 +96,25 @@ class ReplicateJob:
     # Arrow round-trip on the hot path; ~2× faster per batch at 1 core).
     # "pandas": the vectorized Arrow UDF. Identical output (test-pinned).
     hash_impl: str = "builtin"
-    # Pre-merge LWW dedup strategy. "auto" (default): MoR sinks SKIP the
-    # dedup aggregation — the delta read path and minor compaction
-    # already resolve the max-seq winner per key (delete winners mask),
-    # so for a log with a unique per-key event_seq (the O2 contract the
-    # event log enforces by construction) the pre-shuffle ``max_by`` is
-    # a second copy of the same resolution. Skipping it removes the
-    # sort-based aggregation from the hot path (max_by over a wide
-    # struct buffer plans as SortAggregate — a full-width record sort
-    # whose memory traffic is the worst-scaling stage of the batch at
-    # 4× parallelism) at the cost of writing duplicate-key rows into
-    # the delta (resolved on read, squashed by the next minor
-    # compaction — bounded write amplification, the standard LSM
-    # trade). CoW merges still dedup: their single-shuffle winner
-    # resolution REQUIRES ≤1 change row per key. Forced values: "agg" /
-    # "window" (always dedup, see operators/dedup.py), "skip" (never —
-    # caller asserts unique seqs and a MoR sink).
+    # Pre-merge LWW dedup strategy. "auto" (default): SKIP the dedup
+    # aggregation whenever the sink resolves winners by sequence — every
+    # table this job creates carries ``seq_col``. MoR resolves the
+    # max-seq winner per key on read and in minor compaction (delete
+    # winners mask); the CoW merge resolves it with its own (seq, side)
+    # ``max_by`` over old rows ∪ changes, which already picks the winner
+    # among several change rows of one key. For a log with a unique
+    # per-key event_seq (the O2 contract the event log enforces by
+    # construction) a pre-merge ``max_by`` is a second copy of the same
+    # resolution: max_by over a wide struct buffer plans as
+    # SortAggregate, a full-width record sort, and skipping it leaves
+    # one exchange per batch on either sink. The cost on MoR is
+    # duplicate-key rows in the delta (resolved on read, squashed by the
+    # next minor compaction — bounded write amplification, the standard
+    # LSM trade); on CoW it is nothing, since the merge shuffles every
+    # change row either way. A table without ``seq_col`` gets "agg".
+    # Forced values: "agg" / "window" (always dedup, see
+    # operators/dedup.py), "skip" (never — caller asserts unique seqs
+    # and a ``seq_col`` sink).
     dedup: str = "auto"
     collect_metrics: bool = True
     log_max_seq: int | None = None  # for lag computation
@@ -154,24 +166,24 @@ class ReplicateJob:
                 self.task_id, batch_id - 1, {}, global_offset=lo
             )
 
-        # The log is immutable: find every DDL position in the replay
-        # range ONCE (column-pruned scan of two small columns) instead of
+        # The log is immutable: find every DDL event in the replay range
+        # ONCE (column-pruned scan of three small columns) instead of
         # probing per batch — batch caps become driver-side arithmetic.
         # A source that declares itself DDL-free (``no_ddl`` attribute —
         # the lazy generator without ``ddl_every`` sets it) skips even
         # that one scan: a full pass over the range costs ~1-2 s per
         # run() at 1 core for provably zero rows.
         if getattr(self.source, "no_ddl", False):
-            ddl_seqs: list[int] = []
+            ddls: list[tuple[int, str, str | None]] = []
         else:
-            ddl_seqs = self._scan_ddl_positions(lo, until_seq)
+            ddls = self._scan_ddl_positions(lo, until_seq)
 
         batches = 0
         total_rows = 0
         t0 = time.time()
         while lo < until_seq and (max_batches is None or batches < max_batches):
             hi = min(lo + self.batch_size, until_seq)
-            applied_hi, rows = self.apply_batch(batch_id, lo, hi, ddl_seqs=ddl_seqs)
+            applied_hi, rows = self.apply_batch(batch_id, lo, hi, ddls=ddls)
             lo = applied_hi
             batch_id += 1
             batches += 1
@@ -191,49 +203,46 @@ class ReplicateJob:
         }
 
     # ------------------------------------------------------ one batch
-    def _scan_ddl_positions(self, lo: int, hi: int) -> list[int]:
-        """All DDL event_seqs in (lo, hi] — one column-pruned scan (the
-        parquet reader touches two small columns; the generator evaluates
-        two expressions)."""
+    def _scan_ddl_positions(
+        self, lo: int, hi: int
+    ) -> list[tuple[int, str, str | None]]:
+        """Every DDL event in (lo, hi] as ``(event_seq, event_type,
+        schema_change)``, sorted by seq — one column-pruned scan (the
+        parquet reader touches three small columns; the generator
+        evaluates three expressions) and no shuffle."""
         events = self.source(self.spark, lo, hi)
         is_ddl = F.col("event_type").isin(*BARRIER_TYPES)
-        return sorted(
-            r[0]
-            for r in events.filter(is_ddl).select("event_seq").distinct().collect()
-        )
+        rows = events.filter(is_ddl).select(
+            "event_seq", "event_type", "schema_change"
+        ).collect()
+        return sorted(((int(r[0]), r[1], r[2]) for r in rows), key=lambda d: d[0])
 
     def apply_batch(
         self,
         batch_id: int,
         lo: int,
         hi: int,
-        ddl_seqs: list[int] | None = None,
+        ddls: list[tuple[int, str, str | None]] | None = None,
     ) -> tuple[int, int]:
         """Apply events in (lo, hi]; returns (offset applied through, rows in).
 
         If a DDL event sits inside the range, the batch is capped at it:
         DML prefix first, then the DDL as its own commit — DDL-before-DML.
-        ``ddl_seqs`` (from :meth:`_scan_ddl_positions`) avoids a per-batch
-        probe; pass None to probe this range directly.
+        ``ddls`` (from :meth:`_scan_ddl_positions`) carries the DDL events
+        themselves, so a batch issues no lookup of its own; pass None to
+        scan this range directly.
         """
-        raw = self.source(self.spark, lo, hi)
         # Scope filtering is DML-only: a DDL event may carry a repo the
         # scope excludes, but schema changes are table-level and must
-        # still apply (and the lookup below must still find the row).
-        events = scope_filter(raw, self.repo_pattern, self.exclude_repos)
+        # still apply (the DDL scan reads the unfiltered source).
+        events = scope_filter(
+            self.source(self.spark, lo, hi), self.repo_pattern, self.exclude_repos
+        )
 
-        if ddl_seqs is None:
-            ddl_seqs = self._scan_ddl_positions(lo, hi)
-        in_range = [s for s in ddl_seqs if lo < s <= hi]
-        min_ddl = in_range[0] if in_range else None
-        ddl = None
-        if min_ddl is not None:
-            ddl = (
-                raw.filter(F.col("event_seq") == min_ddl)
-                .select("event_type", "schema_change")
-                .collect()[0]
-            )
-        data_hi = (min_ddl - 1) if min_ddl is not None else hi
+        if ddls is None:
+            ddls = self._scan_ddl_positions(lo, hi)
+        ddl = next((d for d in ddls if lo < d[0] <= hi), None)
+        data_hi = (ddl[0] - 1) if ddl is not None else hi
 
         rows_in = 0
         if data_hi > lo:
@@ -245,8 +254,9 @@ class ReplicateJob:
 
         applied_hi = data_hi
         if ddl is not None:
-            self._apply_ddl(ddl["event_type"], ddl["schema_change"], batch_id, event_seq=min_ddl)
-            applied_hi = min_ddl
+            seq, event_type, schema_change = ddl
+            self._apply_ddl(event_type, schema_change, batch_id, event_seq=seq)
+            applied_hi = seq
             self.metastore.save_checkpoint(
                 self.task_id, batch_id, {}, global_offset=applied_hi
             )
@@ -286,6 +296,19 @@ class ReplicateJob:
             dml = dml.filter(
                 (F.col("event_seq") > lo) & (F.col("event_seq") <= hi)
             )
+        affected = None
+        if table.snap.write_mode == "cow":
+            # The touched buckets, from a key-only pass (the scan reads
+            # the key and filter columns, no payload; the Observation is
+            # attached below, so it sees only the merge's pass). Handing
+            # them to the merge lets it skip staging the changes to
+            # discover them.
+            affected = table.buckets_of(self._renamed(dml).select(*KEY_COLS))
+            if not affected:  # no DML row in range: nothing to merge
+                self.metastore.save_checkpoint(
+                    self.task_id, batch_id, {}, global_offset=hi
+                )
+                return 0
         # Hot-repo processing skew is structurally handled by the agg
         # dedup's MAP-SIDE combine (hot-key duplicates collapse before the
         # shuffle) + AQE skew splitting. Explicit salting is only worth an
@@ -306,6 +329,7 @@ class ReplicateJob:
             changes,
             compact_threshold=self.compact_threshold,
             changes_partitioned=True,
+            affected_buckets=affected,
             properties={
                 "task_id": self.task_id,
                 "batch_id": batch_id,
@@ -387,32 +411,43 @@ class ReplicateJob:
         )
         return positions, rows_total
 
-    def _build_changes(self, dml: DataFrame) -> DataFrame:
-        """LWW dedup + vectorized payload transforms → merge-ready changes.
+    def _renamed(self, dml: DataFrame) -> DataFrame:
+        """Apply ``name_map`` to the repo column (once per plan: chained
+        renames make the projection non-idempotent)."""
+        if not self.name_map:
+            return dml
+        # literal-map projection: zero shuffle, zero join — right for
+        # the small rename dims this mirrors (a broadcast-join dim is
+        # the swap-in if a deployment ever carries >10^4 renames)
+        mapping = F.create_map(
+            *[F.lit(x) for kv in self.name_map.items() for x in kv]
+        )
+        return dml.withColumn("repo", F.coalesce(mapping[F.col("repo")], F.col("repo")))
 
-        The dedup shuffle is pinned to num_buckets partitions on the merge
-        key, so its output is ALREADY bucket-aligned — the merge write
-        adds no second exchange (single-shuffle hot path)."""
-        if self.name_map:
-            # literal-map projection: zero shuffle, zero join — right for
-            # the small rename dims this mirrors (a broadcast-join dim is
-            # the swap-in if a deployment ever carries >10^4 renames)
-            mapping = F.create_map(
-                *[F.lit(x) for kv in self.name_map.items() for x in kv]
-            )
-            dml = dml.withColumn(
-                "repo", F.coalesce(mapping[F.col("repo")], F.col("repo"))
-            )
+    def _build_changes(self, dml: DataFrame) -> DataFrame:
+        """LWW dedup (when the sink needs it) + payload transforms →
+        merge-ready changes.
+
+        MoR: the one exchange is pinned to num_buckets partitions on the
+        merge key, so the changes are ALREADY bucket-aligned and the delta
+        write adds no second exchange. CoW (skip): the changes plan has no
+        exchange at all — the merge unions them with the old rows and
+        makes its single exchange there."""
+        dml = self._renamed(dml)
+        snap = self.table().snap
         mode = self.dedup
         if mode == "auto":
-            mode = "skip" if self.table().snap.write_mode == "mor" else "agg"
+            mode = "skip" if snap.seq_col else "agg"
         if mode == "skip":
-            # MoR fast path: co-locate by key (partition index == bucket
-            # id, same single shuffle the dedup pinned) and tag deletes;
-            # winner resolution is the sink's read/compaction max-by-seq
-            # (icebox._resolve / _compact_buckets) — see the ``dedup``
-            # field docstring for the contract.
-            deduped = dml.repartition(self.num_buckets, *KEY_COLS).withColumn(
+            # winner resolution is the sink's max-by-seq: the MoR read and
+            # minor compaction (icebox._resolve / _compact_buckets), or the
+            # CoW merge — see the ``dedup`` field docstring for the
+            # contract. MoR co-locates by key here (partition index ==
+            # bucket id, the single shuffle of the delta write).
+            deduped = dml
+            if snap.write_mode == "mor":
+                deduped = deduped.repartition(self.num_buckets, *KEY_COLS)
+            deduped = deduped.withColumn(
                 "__deleted", F.col("event_type") == F.lit("delete")
             )
         else:

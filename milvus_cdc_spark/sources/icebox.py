@@ -42,6 +42,7 @@ Layout::
 from __future__ import annotations
 
 import fcntl
+import functools
 import json
 import os
 import threading
@@ -92,8 +93,7 @@ class Snapshot:
 
     def schema(self, version: int | None = None) -> T.StructType:
         v = self.current_schema_version if version is None else version
-        ddl = self.schema_versions[v]["schema"]
-        return T.StructType.fromDDL(ddl)
+        return _parse_schema(self.schema_versions[v]["schema"])
 
 
 class IceboxTable:
@@ -285,6 +285,9 @@ class IceboxTable:
                     vschema.fields + [T.StructField(_DELETED_COL, T.BooleanType(), False)]
                 )
             df = self.spark.read.schema(vschema).parquet(*paths)
+            if vschema == target:
+                parts.append(df)  # current-version files need no upcast
+                continue
             # upcast to current schema: add missing columns as null, widen types
             cols = []
             have = {fld.name: fld for fld in vschema.fields}
@@ -298,6 +301,16 @@ class IceboxTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def buckets_of(self, keys: DataFrame) -> list[int]:
+        """Sorted distinct bucket ids of the rows of ``keys``, a DataFrame
+        holding the table's key columns — the ``affected_buckets`` a CoW
+        caller passes to :meth:`merge`. Select only the key columns
+        upstream: the pass then reads nothing else."""
+        snap = self.snap
+        assert snap is not None, "table does not exist"
+        b = _placement(snap, snap.key_cols, snap.num_buckets).alias(_BUCKET_COL)
+        return sorted(r[0] for r in keys.select(b).distinct().collect())
 
     # ------------------------------------------------------------ write
     def merge(
@@ -314,8 +327,13 @@ class IceboxTable:
         """MERGE INTO: upsert-or-delete ``changes`` by the table's key.
 
         ``changes`` must carry the table's current columns plus a boolean
-        ``delete_col`` and have AT MOST ONE ROW PER KEY (enforce upstream
-        with the LWW dedup — ``operators/dedup.py``). Semantics:
+        ``delete_col``. On a table with ``seq_col`` it may hold SEVERAL
+        rows per key: the highest sequence wins, exactly as between old
+        and new rows (so the caller needs no pre-merge dedup when each
+        key's sequences are unique). Without ``seq_col`` there is nothing
+        to order them by, and ``changes`` must have AT MOST ONE ROW PER
+        KEY (enforce upstream with the LWW dedup —
+        ``operators/dedup.py``). Semantics:
 
             WHEN MATCHED AND __deleted THEN DELETE
             WHEN MATCHED THEN UPDATE SET *
@@ -323,17 +341,23 @@ class IceboxTable:
 
         Physical plans:
 
-        - **cow** (write_mode="cow"): old rows of affected buckets and
-          changes are unioned and the per-key winner picked with ONE hash
-          aggregation (``max_by(payload, priority)``) — a single shuffle
-          with map-side partial combine, vs. anti-join + union (two
-          shuffles + a join build). With the table's ``seq_col`` set, the
-          higher sequence wins regardless of side, making a replayed
-          stale change a structural no-op (the reference's ts-based
-          visibility, SURVEY.md §3.4). Untouched buckets' files carry
-          over into the new snapshot.
-        - **mor** (write_mode="mor"): the deduped changes (including
-          delete markers) are appended as per-bucket DELTA files —
+        - **cow** (write_mode="cow"): old rows of the affected buckets and
+          the changes are unioned, exchanged ONCE (on the keys into
+          ``num_buckets`` partitions, so partition index == bucket id),
+          and the per-key winner picked by ``max_by(payload, (seq,
+          side))`` on that partitioning — the write that follows adds no
+          exchange and writes one file per rewritten bucket. With the
+          table's ``seq_col`` set, the higher sequence wins regardless of
+          side, making a replayed stale change a structural no-op (the
+          reference's ts-based visibility, SURVEY.md §3.4); changes win
+          ties. Untouched buckets' files carry over into the new
+          snapshot. Callers that know the touched buckets pass
+          ``affected_buckets`` (``ReplicateJob`` gets them from a key-only
+          pass over the batch, :meth:`buckets_of`); otherwise the changes
+          are first staged as bucket-partitioned parquet, whose
+          directories reveal the buckets, and read back into the union.
+        - **mor** (write_mode="mor"): the changes (including delete
+          markers) are appended as per-bucket DELTA files —
           O(batch) write cost regardless of table size, the property
           that sustains upsert throughput at 10^10 events. Reads resolve
           winners by seq; buckets whose delta-file count exceeds
@@ -344,7 +368,7 @@ class IceboxTable:
         asserts ``changes`` is the COMPLETE post-image of the affected
         buckets — every surviving row, one row per key. The merge then
         skips its own read of the old buckets and the winner-resolution
-        shuffle and just stages the rows (still delete-filtered and
+        shuffle and just writes the rows (still delete-filtered and
         stray-bucket-validated). Right for read-modify-write callers
         (the rollup) that already joined old state in: without it the
         affected buckets are read twice and shuffled once more per
@@ -420,17 +444,18 @@ class IceboxTable:
 
             return self._commit_retrying(build)
         else:
-            # Stage the changes ONCE, partitioned by bucket: the staged
-            # dirs reveal the affected buckets (the pruning step that
-            # makes CoW merges O(touched data)) AND the winner resolution
-            # below re-reads the cheap staged parquet — the expensive
-            # upstream pipeline (dedup + Arrow UDFs) executes exactly one
-            # time instead of once for discovery and again for the write.
+            # Without affected_buckets, stage the changes ONCE,
+            # partitioned by bucket: the staged dirs reveal the affected
+            # buckets (the pruning step that makes CoW merges O(touched
+            # data)) AND the winner resolution below re-reads the cheap
+            # staged parquet — the expensive upstream pipeline (dedup +
+            # Arrow UDFs) executes exactly one time instead of once for
+            # discovery and again for the write.
             if affected_buckets is not None:
-                # the caller already knows the touched buckets (e.g. the
-                # rollup computes them from its partials) — skip the
-                # discovery staging write; changes still execute once,
-                # inside the winners write below
+                # the caller already knows the touched buckets (the rollup
+                # from its partials, ReplicateJob from a key-only pass) —
+                # skip the discovery staging write; changes execute once,
+                # inside the rewrite below
                 affected = sorted(set(affected_buckets))
                 if not affected:
                     return snap.snapshot_id
@@ -466,40 +491,11 @@ class IceboxTable:
                     staged_changes.filter(~F.col(delete_col))
                     .drop(delete_col)
                     .withColumn(_BUCKET_COL, bucket)
+                    .repartition(max(len(affected), 1), F.col(_BUCKET_COL))
                 )
             else:
-                old = self.read_buckets(snap, affected)
-                data_cols = [f.name for f in target_schema.fields]
-                tagged_old = old.select(
-                    *[F.col(c) for c in data_cols],
-                    F.lit(False).alias(delete_col),
-                    F.lit(0).alias("__src"),
-                )
-                tagged_new = staged_changes.withColumn("__src", F.lit(1))
-                both = tagged_old.unionByName(tagged_new)
-                payload_cols = [c for c in data_cols if c not in keys] + [delete_col]
-                payload = F.struct(*[F.col(c).alias(c) for c in payload_cols])
-                if snap.seq_col:
-                    priority = F.struct(
-                        F.col(snap.seq_col).alias("s"), F.col("__src").alias("c")
-                    )
-                else:
-                    priority = F.struct(F.col("__src").alias("c"))
-                winners = both.groupBy(*keys).agg(F.max_by(payload, priority).alias("__w"))
-                new_data = (
-                    winners.select(
-                        *keys, *[F.col(f"__w.{c}").alias(c) for c in payload_cols]
-                    )
-                    .filter(~F.col(delete_col))
-                    .drop(delete_col)
-                    .withColumn(_BUCKET_COL, bucket)
-                )
-            (
-                new_data.repartition(max(len(affected), 1), F.col(_BUCKET_COL))
-                .write.partitionBy(_BUCKET_COL)
-                .mode("overwrite")
-                .parquet(staging)
-            )
+                new_data = self._cow_post_image(snap, affected, staged_changes, delete_col)
+            new_data.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(staging)
             staged_cow = _list_bucket_files(staging)
             # The rewrite may only land inside `affected` — a change row
             # hashing OUTSIDE the caller-supplied set would be APPENDED to
@@ -538,6 +534,46 @@ class IceboxTable:
                 return self._child_snapshot(cur, nb, properties)
 
             return self._commit_retrying(build)
+
+    def _cow_post_image(
+        self, snap: Snapshot, affected: list[int], changes: DataFrame, delete_col: str
+    ) -> DataFrame:
+        """The new contents of the ``affected`` CoW buckets, ready for the
+        bucket-partitioned write: old rows ∪ changes, ONE exchange, then
+        the per-key winner by ``max_by(payload, (seq, side))`` on that
+        partitioning. Under murmur3 the exchange is on the keys with
+        ``num_buckets`` partitions (``pmod(hash(keys), n)`` is Spark's
+        HashPartitioning formula, so partition index == bucket id); other
+        formulas exchange on the bucket column. Either way the grouping
+        keys include every partitioning column, so the aggregation and
+        the write add no second exchange, and each bucket is written by
+        one task (one file per rewritten bucket)."""
+        keys = snap.key_cols
+        data_cols = [f.name for f in snap.schema().fields]
+        bucket = _placement(snap, keys, snap.num_buckets).alias(_BUCKET_COL)
+        old = self.read_buckets(snap, affected).select(
+            *data_cols, F.lit(False).alias(delete_col), F.lit(0).alias("__src"), bucket
+        )
+        new = changes.select(*data_cols, delete_col, F.lit(1).alias("__src"), bucket)
+        both = old.unionByName(new)
+        if snap.bucket_formula == "murmur3":
+            both = both.repartition(snap.num_buckets, *keys)
+        else:
+            both = both.repartition(max(len(affected), 1), F.col(_BUCKET_COL))
+        values = [c for c in data_cols if c not in keys]
+        payload = F.struct(*[F.col(c).alias(c) for c in values + [delete_col]])
+        if snap.seq_col:
+            priority = F.struct(F.col(snap.seq_col).alias("s"), F.col("__src").alias("c"))
+        else:
+            priority = F.struct(F.col("__src").alias("c"))
+        # bucket leads the grouping so the aggregate's output ordering
+        # already satisfies the partitioned write's sort
+        winners = both.groupBy(_BUCKET_COL, *keys).agg(
+            F.max_by(payload, priority).alias("__w")
+        )
+        return winners.filter(~F.col(f"__w.{delete_col}")).select(
+            *keys, *[F.col(f"__w.{c}").alias(c) for c in values], _BUCKET_COL
+        )
 
     def _child_snapshot(
         self,
@@ -1058,6 +1094,14 @@ def _list_bucket_files(staging: str) -> list[tuple[int, str]]:
             if fn.endswith(".parquet"):
                 out.append((b, os.path.join(d, fn)))
     return out
+
+
+@functools.lru_cache(maxsize=256)
+def _parse_schema(ddl: str) -> T.StructType:
+    """Parse a manifest schema. The parse is a JVM round trip and a merge
+    asks for the same schema several times, so parses are memoized;
+    callers must treat the result as read-only."""
+    return T.StructType.fromDDL(ddl)
 
 
 def _parse_type(dtype: str) -> T.DataType:

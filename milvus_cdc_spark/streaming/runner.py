@@ -161,27 +161,29 @@ class StreamingReplicator:
         if last_epoch > epoch_id:
             return
 
-        ddl_rows = (
-            batch_df.filter(F.col("event_type").isin(*BARRIER_TYPES))
-            .select("event_seq", "event_type", "schema_change")
-            .orderBy("event_seq")
-            .collect()
-        )
+        # One aggregate finds the epoch's DDL rows and its max seq (one
+        # job; the DDL rows are few and sorted here, not by Spark).
+        is_ddl = F.col("event_type").isin(*BARRIER_TYPES)
+        found = batch_df.agg(
+            F.collect_list(
+                F.when(is_ddl, F.struct("event_seq", "event_type", "schema_change"))
+            ).alias("ddl"),
+            F.max("event_seq").alias("max_seq"),
+        ).collect()[0]
+        ddl_rows = sorted(found["ddl"], key=lambda r: r["event_seq"])
         segments: list[tuple[int | None, int | None]] = []
         prev: int | None = None  # unbounded below: epoch contents are what Spark handed us
         for r in ddl_rows:
             segments.append((prev, r["event_seq"]))
             prev = r["event_seq"]
-        segments.append((prev, None))
+        if prev is None or found["max_seq"] > prev:
+            # the DML after the last DDL; an epoch that ends in a DDL has
+            # none, and its empty merge would commit nothing
+            segments.append((prev, None))
 
         resume_from = 0
         if last_epoch == epoch_id:
-            if last_seg >= len(segments) - 1:
-                # every segment committed; only the final checkpoint write
-                # (or the stream commit) was lost
-                job.metastore.save_checkpoint(job.task_id, int(ckpt["batch_id"]), {})
-                return
-            resume_from = last_seg + 1
+            ddl_offset = None
             # the DDL paired with the last committed segment may not have
             # applied before the crash — re-apply, idempotent-by-check,
             # under the COMMITTED batch_id (0 would rewind the frozen
@@ -193,11 +195,21 @@ class StreamingReplicator:
                     max(int(ckpt["batch_id"]), 0),
                     event_seq=int(d["event_seq"]),
                 )
+                ddl_offset = int(d["event_seq"])
                 if (
                     job.metastore.load_checkpoint(job.task_id).get("dropped")
                     or table.snap is None
                 ):
                     return  # the re-applied DDL was drop_table: epoch over
+            if last_seg >= len(segments) - 1:
+                # every segment committed; only the final DDL (re-applied
+                # above), the final checkpoint write or the stream commit
+                # was lost
+                job.metastore.save_checkpoint(
+                    job.task_id, int(ckpt["batch_id"]), {}, global_offset=ddl_offset
+                )
+                return
+            resume_from = last_seg + 1
 
         # Continue batch numbering from whichever is ahead: a crash that
         # lost the per-segment checkpoint write leaves the table's

@@ -1,6 +1,7 @@
 """Property-based test: the engine's LWW fold == the pandas oracle on
 arbitrary event interleavings (hypothesis-generated), not just the seeded
-generator's distribution."""
+generator's distribution — through both sinks (MoR and CoW) for every
+generated log."""
 
 import os
 
@@ -50,14 +51,16 @@ def test_lww_fold_matches_oracle_on_arbitrary_logs(spark, tmp_path_factory, evs,
     df = spark.createDataFrame(rows, EV)
     log = os.path.join(tmp, "log")
     df.write.parquet(log)
-    job = ReplicateJob(
-        spark=spark,
-        source=parquet_source(log),
-        table_root=os.path.join(tmp, "tbl"),
-        metastore=Metastore(os.path.join(tmp, "meta")),
-        batch_size=bs,
-        num_buckets=4,
-        log_partitions=4,
-    )
-    job.run(until_seq=len(rows) - 1)
-    assert engine_hashes(job.table().read()) == expected_hashes(df.toPandas())
+    for write_mode in ("mor", "cow"):
+        job = ReplicateJob(
+            spark=spark,
+            source=parquet_source(log),
+            table_root=os.path.join(tmp, write_mode, "tbl"),
+            metastore=Metastore(os.path.join(tmp, write_mode, "meta")),
+            batch_size=bs,
+            num_buckets=4,
+            log_partitions=4,
+            write_mode=write_mode,
+        )
+        job.run(until_seq=len(rows) - 1)
+        assert engine_hashes(job.table().read()) == expected_hashes(df.toPandas()), write_mode

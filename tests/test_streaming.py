@@ -194,6 +194,45 @@ def test_streaming_crash_mid_epoch_resumes_segments(spark, tmp_base):
     assert engine_hashes(table.read()) == expected_hashes(batch_df.toPandas())
 
 
+def test_streaming_crash_before_final_ddl_of_epoch_resumes(spark, tmp_base):
+    """An epoch that ENDS in a DDL has no trailing DML segment, so its
+    last segment is the one paired with that DDL. A crash after the
+    segment's merge but inside the final ``_apply_ddl`` leaves every
+    segment committed: the replay must still re-apply the DDL, and
+    record its offset, before it fences off the epoch."""
+    # DDL at seqs 999 and 1999: the epoch's last event is a DDL
+    _write_chunk(spark, tmp_base, 0, 2000, ddl_every=1000)
+    rep = _mk(spark, tmp_base)
+    batch_df = spark.read.parquet(os.path.join(tmp_base, "log"))
+
+    real_apply_ddl = rep.job._apply_ddl
+    calls = {"n": 0}
+
+    def dying_on_last_ddl(*a, **kw):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("injected crash in the final DDL")
+        return real_apply_ddl(*a, **kw)
+
+    rep.job._apply_ddl = dying_on_last_ddl
+    try:
+        rep._apply_epoch(batch_df, 0)
+        raise AssertionError("injected crash did not fire")
+    except RuntimeError:
+        pass
+    table = rep.job.table()
+    table.refresh()
+    assert int(table.properties["epoch_segment"]) == 1  # the last segment
+    assert "extra_1" not in table.schema.fieldNames()
+
+    rep.job._apply_ddl = real_apply_ddl
+    rep._apply_epoch(batch_df, 0)
+    table.refresh()
+    assert "extra_1" in table.schema.fieldNames()
+    assert rep.job.metastore.load_checkpoint(rep.job.task_id)["global_offset"] == 1999
+    assert engine_hashes(table.read()) == expected_hashes(batch_df.toPandas())
+
+
 def test_streaming_import_event_in_epoch(spark, tmp_base):
     """An import barrier event inside a stream epoch bootstraps the bulk
     file between DML sub-ranges, same ordering contract as DDL."""
